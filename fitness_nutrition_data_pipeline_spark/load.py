@@ -51,18 +51,18 @@ def load_warehouse(
     warehouse_dir: str,
     *,
     partition_facts: bool = False,
-    register_views: bool = True,
-    max_parallel_writes: int = 18,
 ) -> dict[str, str]:
-    """Write all tables; returns table → path in dependency order.
+    """Write all tables and register each as a temp view; returns
+    table → path in dependency order.
 
     The reference's Dims→Bridges→Facts ordering exists for MySQL FK
     checks (main_etl_pipeline.py:757-764); parquet tables have no write
-    dependencies, so the writes run CONCURRENTLY on a thread pool —
-    Spark schedules independent jobs in parallel and each tiny table's
-    job-submission overhead overlaps instead of serializing. (An actual
-    JDBC mirror with FK checks must keep the sequential order — see
-    ``mirror_to_jdbc``.) Returned paths preserve LOAD_ORDER.
+    dependencies, so the writes run CONCURRENTLY, one writer thread per
+    table — Spark schedules independent jobs in parallel and each tiny
+    table's job-submission overhead overlaps instead of serializing. (An
+    actual JDBC mirror with FK checks must keep the sequential order —
+    see ``mirror_to_jdbc_idempotent``.) Returned paths preserve
+    LOAD_ORDER.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -70,10 +70,9 @@ def load_warehouse(
     for name in LOAD_ORDER:
         if name not in warehouse:
             logger.warning("table %s not found in transformed data, skipping", name)
-            if register_views:
-                # drop any stale view from a previous run in this session —
-                # overwrite ≙ DROP/CREATE applies to absent tables too
-                spark.catalog.dropTempView(name)
+            # drop any stale view from a previous run in this session —
+            # overwrite ≙ DROP/CREATE applies to absent tables too
+            spark.catalog.dropTempView(name)
 
     def write_one(name: str) -> str:
         df = warehouse[name]
@@ -84,17 +83,14 @@ def load_warehouse(
         if partition_facts and name in PARTITIONED_FACTS:
             writer = writer.partitionBy("DateKey")
         writer.parquet(path)
-        if register_views:
-            # register on the writer thread: each registration is a py4j
-            # round trip + parquet footer read (~0.1 s), and a sequential
-            # post-pass of 18 of them was ~1.5 s of driver wall-clock;
-            # the catalog is concurrent and names are distinct
-            spark.read.parquet(path).createOrReplaceTempView(name)
+        # register on the writer thread: each registration is a py4j
+        # round trip + parquet footer read (~0.1 s), and a sequential
+        # post-pass of 18 of them was ~1.5 s of driver wall-clock; the
+        # catalog is concurrent and names are distinct
+        spark.read.parquet(path).createOrReplaceTempView(name)
         return path
 
-    pool = ThreadPoolExecutor(
-        max_workers=max(1, min(max_parallel_writes, len(present) or 1))
-    )
+    pool = ThreadPoolExecutor(max_workers=max(1, len(present)))
     try:
         try:
             results = dict(zip(present, pool.map(write_one, present)))
@@ -110,14 +106,11 @@ def load_warehouse(
             # in-flight writers first (cancel the not-yet-started), THEN
             # sweep the catalog.
             pool.shutdown(wait=True, cancel_futures=True)
-            if register_views:
-                for name in present:
-                    try:
-                        spark.catalog.dropTempView(name)
-                    except Exception:  # noqa: BLE001
-                        logger.warning(
-                            "cleanup: could not drop temp view %s", name
-                        )
+            for name in present:
+                try:
+                    spark.catalog.dropTempView(name)
+                except Exception:  # noqa: BLE001
+                    logger.warning("cleanup: could not drop temp view %s", name)
             raise
     finally:
         pool.shutdown(wait=True)
@@ -226,18 +219,6 @@ def write_zordered(
     )
 
 
-def mirror_to_jdbc(
-    warehouse: dict[str, DataFrame], url: str, properties: dict[str, str]
-) -> None:
-    """Optional MySQL-parity sink (S4): append in dependency order via JDBC
-    (reference main_etl_pipeline.py:752-794)."""
-    for name in LOAD_ORDER:
-        if name in warehouse:
-            warehouse[name].write.format("jdbc").option("url", url).option(
-                "dbtable", name.lower()
-            ).options(**properties).mode("append").save()
-
-
 def _jdbc_connection(spark: SparkSession, url: str, properties: dict[str, str]):
     """Driver-side JDBC connection (for the DDL the Spark writer cannot
     express: renames, existence checks). Uses the same driver class AND
@@ -317,10 +298,11 @@ def _jdbc_exec(conn, sql: str) -> None:
 def mirror_to_jdbc_idempotent(
     warehouse: dict[str, DataFrame], url: str, properties: dict[str, str]
 ) -> None:
-    """Exactly-once JDBC mirror: write-staging-then-rename-swap, so a
+    """Optional MySQL-parity sink (S4; reference main_etl_pipeline.py:
+    752-794), made exactly-once: write-staging-then-rename-swap, so a
     RETRIED load converges to the same table contents instead of
-    appending duplicates (``mirror_to_jdbc``'s append mode is
-    at-least-once — a crashed-and-retried orchestration doubles rows).
+    appending duplicates (a plain JDBC append is at-least-once — a
+    crashed-and-retried orchestration doubles rows).
 
     Per table, in dependency order: (1) repair any crashed swap — a
     missing live table with a ``_old`` sidecar rolls back; a stale

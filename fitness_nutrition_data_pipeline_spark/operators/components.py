@@ -155,15 +155,18 @@ def _union_find_labels(sym: DataFrame) -> DataFrame:
     return sym.coalesce(1).mapInPandas(labels, out_schema)
 
 
+# ~2M edge rows ≈ 32 MB: sizes the star-CC round-state partitions and
+# is the default bound below which it finishes in one local task
+_STATE_ROWS_PER_PARTITION = 2_000_000
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     *,
     max_rounds: int = 30,
-    check_every: int = 1,
-    state_rows_per_partition: int = 2_000_000,
-    local_finish_rows: int = 2_000_000,
+    local_finish_rows: int = _STATE_ROWS_PER_PARTITION,
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) — the
@@ -192,7 +195,7 @@ def connected_components_star(
 
     - round state is coalesced before each checkpoint to a partition
       count derived from the materialized edge count
-      (``state_rows_per_partition``, ~2M edge rows ≈ 32 MB per
+      (``_STATE_ROWS_PER_PARTITION``, ~2M edge rows ≈ 32 MB per
       partition) instead of whatever layout AQE left — measured −20%
       on dedup_clusters_exact at sf0.1 where the state collapses to one
       partition, while a 100 TB edge set still gets thousands of
@@ -210,14 +213,11 @@ def connected_components_star(
       edge set (−15%); ``vertices`` is no longer checkpointed (it was
       materialized eagerly but consumed exactly once, at the end — it
       now derives lazily from the pinned setup state);
-    - the convergence diff runs every ``check_every`` rounds. Default 1:
-      with 1-partition round state the diff job (~0.2 s) is cheaper
-      than the extra materialization an overshoot costs (~0.7 s), so
-      skipping checks LOST time when measured (8.8 s at check_every=2
-      vs 6.9 s at 1). The knob is kept because the trade reverses when
-      the diff is not answer-sized. Star alternations on a converged
-      edge set are idempotent, so any check_every >= 1 yields identical
-      labels.
+    - the convergence diff runs every round: with 1-partition round
+      state the diff job (~0.2 s) is cheaper than the extra
+      materialization an overshoot costs (~0.7 s), so skipping checks
+      LOST time when measured (8.8 s checking every 2nd round vs
+      6.9 s every round).
 
     AQE-off inside the loop (fewer jobs: 92 → 29) was measured SLOWER
     (9.0 s vs 6.9 s even with shuffle.partitions pinned to the state
@@ -264,7 +264,7 @@ def connected_components_star(
         1,
         min(
             sym.rdd.getNumPartitions(),
-            -(-n_edges // state_rows_per_partition),
+            -(-n_edges // _STATE_ROWS_PER_PARTITION),
         ),
     )
 
@@ -288,7 +288,7 @@ def connected_components_star(
             out.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).select(F.col("u").alias("a"), F.col("v").alias("b"))
 
-    for rnd in range(max_rounds):
+    for _ in range(max_rounds):
         # one materialization per ALTERNATION PAIR; the symmetrized
         # union may carry an edge twice (both orientations emitted) —
         # harmless to groupBy-min, and the convergence check below is
@@ -298,14 +298,12 @@ def connected_components_star(
             .coalesce(n_state_parts)
             .localCheckpoint()
         )
-        diff = -1
-        if (rnd + 1) % check_every == 0 or rnd + 1 == max_rounds:
-            diff = (
-                nxt.join(sym, ["a", "b"], "left_anti")
-                .union(sym.join(nxt, ["a", "b"], "left_anti"))
-                .limit(1)
-                .count()
-            )
+        diff = (
+            nxt.join(sym, ["a", "b"], "left_anti")
+            .union(sym.join(nxt, ["a", "b"], "left_anti"))
+            .limit(1)
+            .count()
+        )
         sym = nxt
         if diff == 0:
             break

@@ -81,7 +81,6 @@ class FitnessWarehousePipeline:
         # phases (r11 A/B: overlapped cold transform+load beat the
         # sequential prime; staging itself keeps its prime vs the 18
         # writers, the r10 finding).
-        import os
         from concurrent.futures import ThreadPoolExecutor
 
         # 2 slots for the primes + 1 for the bridges declaration below
@@ -91,11 +90,6 @@ class FitnessWarehousePipeline:
             pool.submit(df.count) for df in (self.staging, self.mapping)
         ]
         try:
-            if os.environ.get("SPARK_GRAFT_SEQ_PRIME"):
-                # measurement toggle: barrier here reproduces the r10
-                # sequential-prime shape for A/B protocol runs
-                for fut in primes:
-                    fut.result()
             dims = build_dimensions(
                 self.spark, self.staging, self.sources.get("nutrition"), self.cfg
             )
@@ -120,21 +114,13 @@ class FitnessWarehousePipeline:
                 df.cache()
 
             # bridges and facts both consume dims but not each other —
-            # declare them concurrently too (SPARK_GRAFT_SEQ_DECL=1
-            # serializes all pooled declarations for A/B runs)
-            if os.environ.get("SPARK_GRAFT_SEQ_DECL"):
-                bridges = build_bridges(self.staging, dims)
-                facts = build_facts(
-                    self.spark, self.sources, self.staging, self.mapping,
-                    dims, self.cfg,
-                )
-            else:
-                bridges_fut = pool.submit(build_bridges, self.staging, dims)
-                facts = build_facts(
-                    self.spark, self.sources, self.staging, self.mapping,
-                    dims, self.cfg,
-                )
-                bridges = bridges_fut.result()
+            # declare them concurrently too
+            bridges_fut = pool.submit(build_bridges, self.staging, dims)
+            facts = build_facts(
+                self.spark, self.sources, self.staging, self.mapping,
+                dims, self.cfg,
+            )
+            bridges = bridges_fut.result()
         finally:
             import sys
 

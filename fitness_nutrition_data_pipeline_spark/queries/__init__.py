@@ -75,100 +75,6 @@ def register(
     return wrap
 
 
-# The driver's correctness harness samples the FIRST 50 registrations, so
-# ordering is signal allocation. Round-18 window (optimization round 2),
-# planned against tools/rotation_report.py at r18 open:
-# (1) the full r12-hot cohort, 24 mandatory drains — their signals reach
-#     age 7 at r19, and r19 also owes the 34-query r13 cohort, so
-#     skipping any of them now makes the r19 window infeasible (59 > 50);
-# (2) the 8 queries whose behavior this optimization round deliberately
-#     changed (dedup_clusters_exact / kcore local finish, the single-pass
-#     ANN contracts, the salted day-partitioned writes) — 4 of them with
-#     drifted digests (dedup_clusters_exact, ann_recall_contract,
-#     ivf_beam_recall_contract, kcore_fixpoint_audit); the three write
-#     audits' RETURNED plans are digest-identical (the salted write is a
-#     build-time side effect) but their execution changed, so they are
-#     windowed for fresh signals too, plus kcore_peel_audit as the
-#     bounded-unroll sibling of the changed fixpoint operator (its own
-#     inline unroll is untouched). All oracle-verified locally at 3 SFs
-#     this round. vocab_inventory and
-#     tpch_q3_shipping_priority also changed this round but by REVERTING
-#     to their frozen-blessed plans (the r17 repartitions failed
-#     re-validation), so their freeze-time digests match the committed
-#     map again and the frozen witness covers them without a slot;
-# (3) the oldest of the 33 ex-frozen queries auto-promoted by the r17
-#     loader-repartition digest drift (VERDICT r17 ask #8) — fresh green
-#     signals at the current digests make them re-freeze-eligible. The 7
-#     promoted entries that don't fit (zipf_slope_top_terms,
-#     fixed_size_stratum_sample, type_token_ratio, hapax_ratio_by_source,
-#     sequence_packing_windows, repetition_profile, lang_confusion_matrix)
-#     carry r16 signals (age 2) and rotate in r19+'s slack.
-# After this window lands green the oldest HOT signal registry-wide is
-# r13; r19's plan is that 34-query cohort + 16 slack. The staged queries
-# (incremental_dedup_clusters, rerank_cascade_eval,
-# graph_ann_recall_contract) stay unregistered — registration is feature
-# work, out of scope for an optimization round. Queries frozen under
-# tools/registry_freeze.json are excluded from the age invariant (their
-# staleness witness is the committed plan digest).
-_CHECK_PRIORITY = (
-    # --- round-18 window (driver checks the FIRST 50) ---
-    # (1) the full r12-hot cohort: 24 mandatory drains
-    "cep_batch_replay",
-    "csv_roundtrip_scan",
-    "dedup_clusters_exact",
-    "deletion_propagation_audit",
-    "embedding_ann_ivf_probe",
-    "embedding_centroid_assign",
-    "embedding_knn_bruteforce",
-    "embedding_near_dup_pairs",
-    "funnel_time_to_convert",
-    "heavy_hitters_batch_replay",
-    "ingestion_lag_audit",
-    "l_diversity_audit",
-    "minhash_dedup_flags",
-    "near_dup_pipeline",
-    "ngram_jaccard_pairs",
-    "pit_join_scd2",
-    "quantile_sketch_merge",
-    "ratelimit_batch_replay",
-    "rfm_segmentation",
-    "simhash_hamming_pairs",
-    "simhash_signatures",
-    "split_contamination_matrix",
-    "stratified_train_eval_split",
-    "token_length_percentiles",
-    # (2) r18 plan-changed queries (re-bless the new digests)
-    "ann_recall_contract",
-    "ivf_beam_recall_contract",
-    "kcore_fixpoint_audit",
-    "kcore_peel_audit",
-    "partitioned_write_prune_audit",
-    "dynamic_partition_prune_audit",
-    "storage_layout_inventory_audit",
-    # (dedup_clusters_exact is #3 above in the r12 cohort)
-    # (3) oldest auto-promoted ex-frozen (r14 then r16 signals)
-    "dedup_keep_best",
-    "doc_fingerprint",
-    "doc_quality_score",
-    "domain_mixing_budget",
-    "edit_distance_pairs",
-    "hash_stratified_sample",
-    "incremental_ingest_dedup",
-    "lang_id_scores",
-    "tfidf_top_terms",
-    "token_count",
-    "train_val_test_split",
-    "winnowing_fingerprints",
-    "boilerplate_chunks",
-    "cdc_chunk_dedup",
-    "contamination_check",
-    "embedding_lsh_buckets",
-    "embedding_quantization_params",
-    "minhash_lsh_buckets",
-    "unigram_logprob_docs",
-)
-
-
 _QUERY_MODULES = (
     "analytics_ops",
     "analytics_ops2",
@@ -207,7 +113,7 @@ IMPORT_FAILURES: dict[str, str] = {}
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Registry snapshot in driver-check-priority order.
+    """Registry snapshot in registration order.
 
     Module imports are ISOLATED: one module failing to import (e.g. a
     Spark API that moved between environment versions — it has happened
@@ -232,6 +138,4 @@ def all_specs() -> dict[str, QuerySpec]:
                 "unavailable this run): %s", mod, e
             )
 
-    ordered = {n: _REGISTRY[n] for n in _CHECK_PRIORITY if n in _REGISTRY}
-    ordered.update(_REGISTRY)
-    return ordered
+    return dict(_REGISTRY)

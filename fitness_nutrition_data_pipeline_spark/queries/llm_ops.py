@@ -1557,9 +1557,8 @@ def embedding_dot_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered at r16 in the window's second slack slot (staged + gate-proven
-# during r15 by tests/test_ann_staged.py, which keeps running the driver-gate
-# compare at two SFs as the always-on regression harness).
+# tests/test_ann_staged.py keeps running the oracle compare on this pair
+# at two SFs as the always-on regression harness.
 # ---------------------------------------------------------------------------
 
 _IVF_BEAM_ORACLE = f"""
@@ -1625,8 +1624,7 @@ _IVF_BEAM_ORACLE = f"""
 )
 def ivf_beam_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beam-search ANN quality/cost contract — the nprobe knob of the
-    IVF ladder made oracle-checkable (the beam protocol of
-    operators/similarity.py::ivf_beam_topk, reformulated since r18 as
+    IVF ladder made oracle-checkable (the beam protocol runs through
     the shared single-pass body `_ann_recall_single_pass` so its
     candidate ranking reuses the brute-force side's scored pipeline
     instead of re-fetching corpus vectors): rank all coarse centroids
@@ -1658,12 +1656,9 @@ def ivf_beam_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r17 (the window's one slack slot, per VERDICT r16 ask #2; it
-# was staged through r16 because the rotation contract requires new
-# registrations to sit inside the driver's 50-slot window). The REAL
-# engine's batch-split invariance stays pinned by
-# tests/test_lsh_bridge_property.py, and tests/test_lsh_bridge_staged.py
-# keeps the two-SF driver-gate comparison green.
+# Streaming LSH dedup bridge replay. The real engine's batch-split
+# invariance is pinned by tests/test_lsh_bridge_property.py, and
+# tests/test_lsh_bridge_staged.py keeps the two-SF oracle comparison.
 # ---------------------------------------------------------------------------
 
 _LSH_REPLAY_ORACLE = (
@@ -1724,704 +1719,4 @@ def lsh_dedup_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(1)
         .sortWithinPartitions("doc_id_a", "doc_id_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED FOR r17+ (same rotation-contract reason as lsh_dedup_batch_replay
-# above; registration takes whichever slack slot the r17/r18 window opens).
-# Driver-gate-compared at two SFs by tests/test_graph_ann_staged.py.
-# ---------------------------------------------------------------------------
-
-_GRAPH_K_EDGE = 8  # kNN-graph out-degree
-_GRAPH_N_ENTRY = 2  # entry centroids per query
-_GRAPH_HOPS = 3  # frontier expansions
-
-_GRAPH_ANN_ORACLE = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    c AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e WHERE vec_id < 10),
-    q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id >= 495),
-    assign AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 round({_COS_SQL.format(a="e.emb", b="c.c_emb")}, 6) DESC,
-                 c.centroid_id) AS rn
-        FROM e JOIN c ON true
-      ) WHERE rn = 1
-    ),
-    edges AS (
-      SELECT src, dst FROM (
-        SELECT a.vec_id AS src, b.vec_id AS dst,
-               row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                 round({_COS_SQL.format(a="ea.emb", b="eb.emb")}, 6) DESC,
-                 b.vec_id) AS rn
-        FROM assign a
-        JOIN assign b ON b.centroid_id = a.centroid_id
-                     AND b.vec_id <> a.vec_id
-        JOIN e ea ON ea.vec_id = a.vec_id
-        JOIN e eb ON eb.vec_id = b.vec_id
-      ) WHERE rn <= {_GRAPH_K_EDGE}
-    ),
-    entry AS (
-      SELECT q_id, centroid_id AS node FROM (
-        SELECT q.q_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.q_id ORDER BY
-                 round({_COS_SQL.format(a="q.q_emb", b="c.c_emb")}, 6) DESC,
-                 c.centroid_id) AS rn
-        FROM q JOIN c ON true
-      ) WHERE rn <= {_GRAPH_N_ENTRY}
-    ),
-    f1 AS (
-      SELECT q_id, node FROM entry
-      UNION
-      SELECT en.q_id, ed.dst FROM entry en JOIN edges ed ON ed.src = en.node
-    ),
-    f2 AS (
-      SELECT q_id, node FROM f1
-      UNION
-      SELECT f.q_id, ed.dst FROM f1 f JOIN edges ed ON ed.src = f.node
-    ),
-    f3 AS (
-      SELECT q_id, node FROM f2
-      UNION
-      SELECT f.q_id, ed.dst FROM f2 f JOIN edges ed ON ed.src = f.node
-    ),
-    ranked AS (
-      SELECT cd.q_id, cd.node,
-             count(*) OVER (PARTITION BY cd.q_id) AS n_candidates,
-             row_number() OVER (PARTITION BY cd.q_id ORDER BY
-               round({_COS_SQL.format(a="qq.q_emb", b="ee.emb")}, 6) DESC,
-               cd.node) AS rn
-      FROM (SELECT q_id, node FROM f3 WHERE node <> q_id) cd
-      JOIN q qq ON qq.q_id = cd.q_id
-      JOIN e ee ON ee.vec_id = cd.node
-    ),
-    exact AS (
-      SELECT q_id, neighbor_id FROM (
-        SELECT q.q_id, e.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.q_id ORDER BY
-                 round({_COS_SQL.format(a="q.q_emb", b="e.emb")}, 6) DESC,
-                 e.vec_id) AS rn
-        FROM q JOIN e ON e.vec_id <> q.q_id
-      ) WHERE rn <= 3
-    )
-    SELECT r.q_id,
-           CAST(count(x.neighbor_id) AS BIGINT) AS n_overlap,
-           round(count(x.neighbor_id) / 3.0, 4) AS recall_at_3,
-           CAST(max(r.n_candidates) AS BIGINT) AS n_candidates
-    FROM ranked r LEFT JOIN exact x
-      ON x.q_id = r.q_id AND x.neighbor_id = r.node
-    WHERE r.rn <= 3
-    GROUP BY r.q_id
-    ORDER BY r.q_id
-"""
-
-
-def graph_ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph-ANN recall/cost contract — the NSW/HNSW-style rung above
-    ivf_beam_recall_contract on the ANN ladder (operators/similarity.py
-    ::knn_graph_edges + graph_beam_search): build a partition-local kNN
-    graph (out-degree 8, IVF-blocked so the pair stage never goes
-    globally quadratic), enter at each query's 2 nearest centroids, and
-    expand the frontier 3 hops before exact-ranking the candidate set.
-    recall@3 is judged against the brute-force top-3 with n_candidates
-    (nodes actually scored) beside it — the recall-vs-cost pair again,
-    now for the search strategy whose per-query cost is bounded by
-    entries × degree^hops INDEPENDENT of partition size (a probe scans
-    whole partitions; the walk does not). Same deterministic protocol
-    as the other ANN contracts: centroids = vec_id < 10, queries =
-    vec_id >= 495, cosine rounded to 6dp before every ranking with id
-    tie-breaks, both engines compute both sides."""
-    from fitness_nutrition_data_pipeline_spark.operators.similarity import (
-        assign_centroids,
-        brute_force_topk,
-        graph_beam_search,
-        knn_graph_edges,
-    )
-
-    e = _emb(spark, sf_dir)
-    queries = e.where(F.col("vec_id") >= 495)
-    centroids = e.where(F.col("vec_id") < 10)
-    exact = brute_force_topk(e, queries, "vec_id", "embedding", k=3).select(
-        "q_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    assignments = assign_centroids(e, centroids, "vec_id", "embedding")
-    # materialize the graph once before the walk (graph_beam_search's
-    # caller contract, ADVICE r16 #2): the per-hop frontier pins are
-    # eager, so an unpinned edges relation would re-run the kNN-graph
-    # self-join + window once per hop (~hops+1 builds). The edge list
-    # is corpus × k rows of (src, dst, sim) — bounded at contract
-    # scale; a production index build writes it to parquet instead.
-    edges = knn_graph_edges(
-        e, assignments, "vec_id", "embedding", k=_GRAPH_K_EDGE
-    ).localCheckpoint()
-    walked = graph_beam_search(
-        e, centroids, edges, queries,
-        "vec_id", "embedding",
-        k=3, n_entry=_GRAPH_N_ENTRY, hops=_GRAPH_HOPS,
-    )
-    return (
-        walked.join(exact, ["q_id", "neighbor_id"], "left")
-        .groupBy("q_id")
-        .agg(
-            F.count("hit").cast("bigint").alias("n_overlap"),
-            F.round(F.count("hit") / F.lit(3.0), 4).alias("recall_at_3"),
-            F.max("n_candidates").cast("bigint").alias("n_candidates"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id")
-    )
-
-
-def incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED FOR r17+ (same rotation-contract note as
-    lsh_dedup_batch_replay above). Incrementally-maintained duplicate
-    clusters: the LshDedupBridge streams candidate pairs per micro-batch
-    (documents in three doc_id % 3 batches) and
-    streaming/lsh_bridge.py::IncrementalComponents folds each delta into
-    a star-forest component labeling — per batch the CC re-converges in
-    ~2 alternations because the state is height-1, so cost is
-    O(|clustered docs| + |delta|) per batch, never a recompute over
-    historical pairs. The final labeling must equal the GLOBAL exact
-    transitive closure over every band-colliding pair — the same oracle
-    dedup_clusters_exact answers in one batch shot (band-pair
-    connectivity ≡ the doc↔bucket-min star connectivity it uses, so the
-    two routes share one truth). This is the IVM contract for the dedup
-    ladder's cluster stage: incremental == batch, under the hard value
-    oracle."""
-    from fitness_nutrition_data_pipeline_spark.streaming.lsh_bridge import (
-        IncrementalComponents,
-        LshDedupBridge,
-    )
-
-    docs = _docs(spark, sf_dir)
-    bridge = LshDedupBridge(spark)
-    cc = IncrementalComponents(spark)
-    labels = None
-    for b in range(3):
-        pairs = bridge.process_batch(docs.where(F.col("doc_id") % 3 == b), b)
-        labels = cc.fold_pairs(pairs)
-    return (
-        labels.select("doc_id", F.col("component").cast("bigint").alias("cluster_id"))
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED FOR r18 (not yet @register'ed — rotation contract: new entries must
-# sit inside the driver's 50-slot window; r17's one slack slot went to the
-# r16-staged lsh_dedup_batch_replay, and rotation_report --plan-next shows
-# 35 r18 slack slots). Driver-gate-compared at two SFs by
-# tests/test_pq_staged.py / tests/test_graph_bridge_staged.py until then.
-#
-# pq_recall_contract: the ANN ladder's MEMORY-BUDGET rung (VERDICT r16
-# ask #8) — embedding_quantization_params proved the scalar int8 story;
-# product quantization is the vector-codebook form the big ANN systems
-# actually serve from (the FAISS IVF-PQ shape, implemented from the
-# public algorithm: subspace decomposition -> per-subspace codebooks ->
-# asymmetric-distance search over code ids).
-#
-# graph_ingest_batch_replay: the streaming graph-ANN ingest bridge
-# (streaming/graph_bridge.py) under the hard value oracle — the IVM
-# contract (incremental == batch) applied to the kNN-graph index the
-# graph_ann_recall_contract walk searches.
-# ---------------------------------------------------------------------------
-
-_PQ_M = 8  # subspaces
-_PQ_SUB = 8  # dims per subspace (8 x 8 = the 64-dim embedding)
-_PQ_NCODES = 16  # codebook entries per subspace (vec_id < 16)
-_PQ_K = 3  # recall cutoff
-
-# per-subspace squared-L2 in integer micro-units: the in-order fold is
-# the bit-identical cross-engine shape (the _COS_SQL precedent), and
-# round(d2 * 1e6) AS BIGINT makes every SUM/rank after it integer math
-# — order-free, so the ADC accumulation over subspaces cannot drift
-# between engines (the serving_ops ppm discipline on the ANN ladder)
-_SQ8U_SQL = (
-    "CAST(round(list_sum(list_transform(range(1, 9), "
-    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) * 1000000.0) AS BIGINT)"
-)
-_SQ64U_SQL = (
-    "CAST(round(list_sum(list_transform(range(1, 65), "
-    "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) * 1000000.0) AS BIGINT)"
-)
-
-_PQ_ORACLE = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    sub AS (
-      SELECT vec_id, CAST(t.j AS INT) AS j,
-             list_slice(emb, CAST(t.j * 8 + 1 AS INT),
-                             CAST(t.j * 8 + 8 AS INT)) AS s
-      FROM e, range(0, {_PQ_M}) t(j)
-    ),
-    codes AS (
-      SELECT vec_id AS code_id, j, s AS cs FROM sub
-      WHERE vec_id < {_PQ_NCODES}
-    ),
-    encd AS (
-      SELECT vec_id, j, code_id FROM (
-        SELECT d.vec_id, d.j, d.code_id,
-               row_number() OVER (PARTITION BY d.vec_id, d.j
-                 ORDER BY d.d2u, d.code_id) AS rn
-        FROM (
-          SELECT s.vec_id, s.j, c.code_id,
-                 {_SQ8U_SQL.format(a="s.s", b="c.cs")} AS d2u
-          FROM sub s JOIN codes c USING (j)
-        ) d
-      ) WHERE rn = 1
-    ),
-    qtab AS (
-      SELECT s.vec_id AS q_id, s.j, c.code_id,
-             {_SQ8U_SQL.format(a="s.s", b="c.cs")} AS d2u
-      FROM sub s JOIN codes c USING (j)
-      WHERE s.vec_id >= 495
-    ),
-    adc AS (
-      SELECT q.q_id, en.vec_id, sum(q.d2u) AS adc_u
-      FROM encd en JOIN qtab q ON q.j = en.j AND q.code_id = en.code_id
-      WHERE en.vec_id <> q.q_id
-      GROUP BY q.q_id, en.vec_id
-    ),
-    ranked AS (
-      SELECT q_id, vec_id,
-             CAST(count(*) OVER (PARTITION BY q_id) AS BIGINT) AS n_scored,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY adc_u, vec_id) AS rn
-      FROM adc
-    ),
-    exact AS (
-      SELECT q_id, neighbor_id FROM (
-        SELECT q.vec_id AS q_id, x.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_SQ64U_SQL.format(a="q.emb", b="x.emb")}, x.vec_id) AS rn
-        FROM e q JOIN e x ON x.vec_id <> q.vec_id
-        WHERE q.vec_id >= 495
-      ) WHERE rn <= {_PQ_K}
-    )
-    SELECT r.q_id,
-           CAST(count(x.neighbor_id) AS BIGINT) AS n_overlap,
-           round(count(x.neighbor_id) / 3.0, 4) AS recall_at_3,
-           max(r.n_scored) AS n_scored
-    FROM ranked r LEFT JOIN exact x
-      ON x.q_id = r.q_id AND x.neighbor_id = r.vec_id
-    WHERE r.rn <= {_PQ_K}
-    GROUP BY r.q_id
-    ORDER BY r.q_id
-"""
-
-
-def pq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN recall/cost contract — the memory-budget
-    rung of the ANN ladder (operators/similarity.py::pq_subvectors /
-    pq_encode): split the 64-dim embedding into 8 contiguous 8-dim
-    subspaces, take the sub-vectors of vec_id < 16 as each subspace's
-    16-entry codebook (4-bit codes: 8 x 4 bits = 4 bytes/vector vs 512
-    raw — the 128x compression that lets a 100 TB vector corpus serve
-    from RAM), encode every vector as its per-subspace nearest code, and
-    answer queries by ASYMMETRIC DISTANCE: per query, a 128-row lookup
-    table (subspace x code -> exact query-to-code distance) is broadcast
-    and the corpus is scanned over CODE IDS ONLY — the full float vector
-    is never touched at query time. recall@3 is judged against the
-    exact squared-L2 top-3 with n_scored beside it (PQ-ADC scans the
-    whole corpus — honest: its saving is bytes-per-candidate, not
-    candidate count; IVF's partition pruning composes on top). All
-    distances are integer micro-units over bit-identical in-order folds
-    (round(d2*1e6) as BIGINT), so the cross-subspace ADC sum is
-    order-free integer math in both engines. Deterministic protocol:
-    queries = vec_id >= 495, ranking ties break by id, both engines
-    compute both sides."""
-    from fitness_nutrition_data_pipeline_spark.operators.similarity import (
-        pq_encode,
-        pq_subvectors,
-        sq_dist,
-    )
-
-    e = _emb(spark, sf_dir)
-    sub = pq_subvectors(e, "vec_id", "embedding", m=_PQ_M, sub_dim=_PQ_SUB)
-    codes = sub.where(F.col("vec_id") < _PQ_NCODES).select(
-        F.col("vec_id").alias("code_id"), "j", F.col("sub").alias("cs")
-    )
-    enc = pq_encode(sub, codes, "vec_id")
-    qd2u = F.round(sq_dist(F.col("sub"), F.col("cs")) * 1e6, 0).cast("long")
-    qtab = (
-        sub.where(F.col("vec_id") >= 495)
-        .join(F.broadcast(codes), "j")
-        .select(
-            F.col("vec_id").alias("q_id"), "j", "code_id",
-            qd2u.alias("d2_micro"),
-        )
-    )
-    adc = (
-        enc.join(F.broadcast(qtab), ["j", "code_id"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("d2_micro").alias("adc_u"))
-    )
-    wc = W.partitionBy("q_id")
-    wr = W.partitionBy("q_id").orderBy("adc_u", "vec_id")
-    ranked = adc.select(
-        "q_id",
-        "vec_id",
-        F.count(F.lit(1)).over(wc).cast("long").alias("n_scored"),
-        F.row_number().over(wr).alias("rn"),
-    ).where(F.col("rn") <= _PQ_K)
-    v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
-    q = v.where(F.col("vec_id") >= 495).select(
-        F.col("vec_id").alias("q_id"), F.col("vec").alias("q_vec")
-    )
-    l2u = F.round(sq_dist(F.col("vec"), F.col("q_vec")) * 1e6, 0).cast("long")
-    we = W.partitionBy("q_id").orderBy("l2u", "vec_id")
-    exact = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", l2u.alias("l2u"))
-        .withColumn("ern", F.row_number().over(we))
-        .where(F.col("ern") <= _PQ_K)
-        .select("q_id", "vec_id", F.lit(1).alias("hit"))
-    )
-    return (
-        ranked.join(exact, ["q_id", "vec_id"], "left")
-        .groupBy("q_id")
-        .agg(
-            F.count("hit").cast("bigint").alias("n_overlap"),
-            F.round(F.count("hit") / F.lit(3.0), 4).alias("recall_at_3"),
-            F.max("n_scored").alias("n_scored"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id")
-    )
-
-
-_GRAPH_INGEST_ORACLE = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    c AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e WHERE vec_id < 10),
-    assign AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 round({_COS_SQL.format(a="e.emb", b="c.c_emb")}, 6) DESC,
-                 c.centroid_id) AS rn
-        FROM e JOIN c ON true
-      ) WHERE rn = 1
-    )
-    SELECT src, dst, edge_sim FROM (
-      SELECT a.vec_id AS src, b.vec_id AS dst,
-             round({_COS_SQL.format(a="ea.emb", b="eb.emb")}, 6) AS edge_sim,
-             row_number() OVER (PARTITION BY a.vec_id ORDER BY
-               round({_COS_SQL.format(a="ea.emb", b="eb.emb")}, 6) DESC,
-               b.vec_id) AS rn
-      FROM assign a
-      JOIN assign b ON b.centroid_id = a.centroid_id
-                   AND b.vec_id <> a.vec_id
-      JOIN e ea ON ea.vec_id = a.vec_id
-      JOIN e eb ON eb.vec_id = b.vec_id
-    ) WHERE rn <= {_GRAPH_K_EDGE}
-    ORDER BY src, dst
-"""
-
-
-def graph_ingest_batch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming kNN-graph ingest bridge under the value oracle: the
-    REAL incremental engine (streaming/graph_bridge.py::
-    GraphIngestBridge — the graph-ANN index maintained as foreachBatch
-    state via the insert-only top-k IVM fold) ingests the embeddings
-    table in three deterministic batches (vec_id % 3, processed 0-1-2),
-    and the FINAL edge relation must equal the closed form one global
-    knn_graph_edges build computes: per node, the top-8 same-IVF-
-    partition neighbors by 6dp-rounded cosine with id tie-breaks. Per
-    batch the engine's work is |batch| x touched-partition members plus
-    a re-rank of affected srcs only, never |history|^2; the oracle
-    rebuilds the whole graph from scratch, so the hash equality re-
-    proves the assignment + ranking algebra end to end. The final
-    relation (not per-batch tags) is the checkable output because top-k
-    maintenance EVICTS: an edge discovered in batch 0 can be legally
-    displaced by a better batch-2 neighbor, so only the converged state
-    is split-invariant (tests/test_graph_bridge_staged.py pins the
-    split-invariance property against drawn batch assignments)."""
-    from fitness_nutrition_data_pipeline_spark.streaming.graph_bridge import (
-        GraphIngestBridge,
-    )
-
-    e = _emb(spark, sf_dir)
-    centroids = e.where(F.col("vec_id") < 10)
-    bridge = GraphIngestBridge(
-        spark, centroids, id_col="vec_id", vec_col="embedding",
-        k=_GRAPH_K_EDGE,
-    )
-    for b in range(3):
-        bridge.process_batch(e.where(F.col("vec_id") % 3 == b), b)
-    return (
-        bridge.read_edges()
-        .select("src", "dst", "edge_sim")
-        .repartition(1)
-        .sortWithinPartitions("src", "dst")
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED FOR r18 (rotation contract, same as the PQ/graph entries above).
-# Driver-gate-compared at two SFs by tests/test_ivfpq_staged.py and
-# tests/test_graph_bridge_staged.py.
-#
-# ivfpq_recall_contract: the ladder-COMPOSITION rung — IVF's partition
-# pruning multiplied by PQ's compressed scan (the full IVF-PQ serving
-# shape the big ANN systems deploy): n_scored shrinks to the probed
-# partitions AND each candidate is scored from 4-byte codes.
-#
-# graph_bridge_search_contract: ingest-then-search == index-then-search —
-# the beam walk run over the STREAMING bridge's incrementally-built graph
-# must reproduce graph_ann_recall_contract's readout exactly (same
-# oracle), proving the online index is search-equivalent, not just
-# edge-set-equal.
-# ---------------------------------------------------------------------------
-
-_IVFPQ_NPROBE = 3
-
-_IVFPQ_ORACLE = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    sub AS (
-      SELECT vec_id, CAST(t.j AS INT) AS j,
-             list_slice(emb, CAST(t.j * 8 + 1 AS INT),
-                             CAST(t.j * 8 + 8 AS INT)) AS s
-      FROM e, range(0, {_PQ_M}) t(j)
-    ),
-    codes AS (
-      SELECT vec_id AS code_id, j, s AS cs FROM sub
-      WHERE vec_id < {_PQ_NCODES}
-    ),
-    encd AS (
-      SELECT vec_id, j, code_id FROM (
-        SELECT d.vec_id, d.j, d.code_id,
-               row_number() OVER (PARTITION BY d.vec_id, d.j
-                 ORDER BY d.d2u, d.code_id) AS rn
-        FROM (
-          SELECT s.vec_id, s.j, c.code_id,
-                 {_SQ8U_SQL.format(a="s.s", b="c.cs")} AS d2u
-          FROM sub s JOIN codes c USING (j)
-        ) d
-      ) WHERE rn = 1
-    ),
-    qtab AS (
-      SELECT s.vec_id AS q_id, s.j, c.code_id,
-             {_SQ8U_SQL.format(a="s.s", b="c.cs")} AS d2u
-      FROM sub s JOIN codes c USING (j)
-      WHERE s.vec_id >= 495
-    ),
-    c AS (SELECT vec_id AS centroid_id, emb AS c_emb FROM e WHERE vec_id < 10),
-    assign AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 round({_COS_SQL.format(a="e.emb", b="c.c_emb")}, 6) DESC,
-                 c.centroid_id) AS rn
-        FROM e JOIN c ON true
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT q_id, centroid_id FROM (
-        SELECT q.vec_id AS q_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 round({_COS_SQL.format(a="q.emb", b="c.c_emb")}, 6) DESC,
-                 c.centroid_id) AS rn
-        FROM e q JOIN c ON true
-        WHERE q.vec_id >= 495
-      ) WHERE rn <= {_IVFPQ_NPROBE}
-    ),
-    cand AS (
-      SELECT p.q_id, a.vec_id
-      FROM probes p JOIN assign a USING (centroid_id)
-      WHERE a.vec_id <> p.q_id
-    ),
-    adc AS (
-      SELECT cd.q_id, cd.vec_id, sum(q.d2u) AS adc_u
-      FROM cand cd
-      JOIN encd en ON en.vec_id = cd.vec_id
-      JOIN qtab q ON q.q_id = cd.q_id AND q.j = en.j
-                 AND q.code_id = en.code_id
-      GROUP BY cd.q_id, cd.vec_id
-    ),
-    ranked AS (
-      SELECT q_id, vec_id,
-             CAST(count(*) OVER (PARTITION BY q_id) AS BIGINT) AS n_scored,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY adc_u, vec_id) AS rn
-      FROM adc
-    ),
-    exact AS (
-      SELECT q_id, neighbor_id FROM (
-        SELECT q.vec_id AS q_id, x.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 {_SQ64U_SQL.format(a="q.emb", b="x.emb")}, x.vec_id) AS rn
-        FROM e q JOIN e x ON x.vec_id <> q.vec_id
-        WHERE q.vec_id >= 495
-      ) WHERE rn <= {_PQ_K}
-    )
-    SELECT r.q_id,
-           CAST(count(x.neighbor_id) AS BIGINT) AS n_overlap,
-           round(count(x.neighbor_id) / 3.0, 4) AS recall_at_3,
-           max(r.n_scored) AS n_scored
-    FROM ranked r LEFT JOIN exact x
-      ON x.q_id = r.q_id AND x.neighbor_id = r.vec_id
-    WHERE r.rn <= {_PQ_K}
-    GROUP BY r.q_id
-    ORDER BY r.q_id
-"""
-
-
-def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ recall/cost contract — the COMPOSITION of the ladder's two
-    cost knobs, which is the shape production ANN systems actually
-    deploy (the public FAISS IVFPQ algorithm, implemented from scratch):
-    the coarse quantizer prunes the corpus to nprobe=3 partitions
-    (ivf_beam's knob — n_scored shrinks from the whole corpus to the
-    probed members), and within the probed partitions candidates are
-    scored by PQ ASYMMETRIC DISTANCE over 4-byte code ids (pq_recall's
-    knob — bytes-per-candidate shrinks 128x). recall@3 is judged
-    against the exact full-width squared-L2 top-3 with n_scored beside
-    it, so the contract measures what the composition COSTS next to
-    what the single-knob rungs cost (pq_recall_contract scans
-    corpus-1; this scans the probed partitions only). Deterministic
-    protocol shared with the whole ANN family: centroids = vec_id < 10
-    (cosine coarse ranking — the quantizer metric need not match the
-    ADC metric, as in production systems), codebooks = sub-vectors of
-    vec_id < 16, queries = vec_id >= 495, integer micro-unit distances
-    over bit-identical in-order folds, id tie-breaks everywhere."""
-    from fitness_nutrition_data_pipeline_spark.operators.similarity import (
-        assign_centroids,
-        cosine,
-        pq_encode,
-        pq_subvectors,
-        sq_dist,
-    )
-
-    e = _emb(spark, sf_dir)
-    sub = pq_subvectors(e, "vec_id", "embedding", m=_PQ_M, sub_dim=_PQ_SUB)
-    codes = sub.where(F.col("vec_id") < _PQ_NCODES).select(
-        F.col("vec_id").alias("code_id"), "j", F.col("sub").alias("cs")
-    )
-    enc = pq_encode(sub, codes, "vec_id")
-    centroids = e.where(F.col("vec_id") < 10)
-    assignments = assign_centroids(
-        e, centroids, "vec_id", "embedding"
-    ).select("vec_id", "centroid_id")
-    c = centroids.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    v = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
-    q = v.where(F.col("vec_id") >= 495).select(
-        F.col("vec_id").alias("q_id"), F.col("vec").alias("q_vec")
-    )
-    wp = W.partitionBy("q_id").orderBy(F.desc("c_sim"), "centroid_id")
-    probes = (
-        q.crossJoin(F.broadcast(c))
-        .select(
-            "q_id",
-            "centroid_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= _IVFPQ_NPROBE)
-        .select("q_id", "centroid_id")
-    )
-    qd2u = F.round(sq_dist(F.col("sub"), F.col("cs")) * 1e6, 0).cast("long")
-    qtab = (
-        sub.where(F.col("vec_id") >= 495)
-        .join(F.broadcast(codes), "j")
-        .select(
-            F.col("vec_id").alias("q_id"), "j", "code_id",
-            qd2u.alias("d2_micro"),
-        )
-    )
-    cand = assignments.join(F.broadcast(probes), "centroid_id").where(
-        F.col("vec_id") != F.col("q_id")
-    ).select("q_id", "vec_id")
-    adc = (
-        cand.join(enc, "vec_id")
-        .join(F.broadcast(qtab), ["q_id", "j", "code_id"])
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("d2_micro").alias("adc_u"))
-    )
-    wc = W.partitionBy("q_id")
-    wr = W.partitionBy("q_id").orderBy("adc_u", "vec_id")
-    ranked = adc.select(
-        "q_id",
-        "vec_id",
-        F.count(F.lit(1)).over(wc).cast("long").alias("n_scored"),
-        F.row_number().over(wr).alias("rn"),
-    ).where(F.col("rn") <= _PQ_K)
-    l2u = F.round(sq_dist(F.col("vec"), F.col("q_vec")) * 1e6, 0).cast("long")
-    we = W.partitionBy("q_id").orderBy("l2u", "vec_id")
-    exact = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", l2u.alias("l2u"))
-        .withColumn("ern", F.row_number().over(we))
-        .where(F.col("ern") <= _PQ_K)
-        .select("q_id", "vec_id", F.lit(1).alias("hit"))
-    )
-    return (
-        ranked.join(exact, ["q_id", "vec_id"], "left")
-        .groupBy("q_id")
-        .agg(
-            F.count("hit").cast("bigint").alias("n_overlap"),
-            F.round(F.count("hit") / F.lit(3.0), 4).alias("recall_at_3"),
-            F.max("n_scored").alias("n_scored"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id")
-    )
-
-
-def graph_bridge_search_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-then-search == index-then-search: run the SAME beam walk
-    and recall readout as graph_ann_recall_contract, but over the edge
-    relation the STREAMING bridge built incrementally (three vec_id % 3
-    micro-batches through GraphIngestBridge) instead of the one-shot
-    knn_graph_edges build. The oracle is graph_ann_recall_contract's
-    verbatim (_GRAPH_ANN_ORACLE) — hash equality therefore proves the
-    online index is SEARCH-equivalent end to end (entry selection,
-    frontier expansion, exact re-ranking, cost accounting), not merely
-    edge-set-equal; combined with graph_ingest_batch_replay the pair
-    closes the loop: the bridge's state is the index, and the index
-    serves. The bridge's memory-tier state is already pinned
-    (localCheckpoint), satisfying graph_beam_search's materialized-
-    edges caller contract without a second pin."""
-    from fitness_nutrition_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        graph_beam_search,
-    )
-    from fitness_nutrition_data_pipeline_spark.streaming.graph_bridge import (
-        GraphIngestBridge,
-    )
-
-    e = _emb(spark, sf_dir)
-    centroids = e.where(F.col("vec_id") < 10)
-    queries = e.where(F.col("vec_id") >= 495)
-    bridge = GraphIngestBridge(
-        spark, centroids, id_col="vec_id", vec_col="embedding",
-        k=_GRAPH_K_EDGE,
-    )
-    for b in range(3):
-        bridge.process_batch(e.where(F.col("vec_id") % 3 == b), b)
-    exact = brute_force_topk(e, queries, "vec_id", "embedding", k=3).select(
-        "q_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    walked = graph_beam_search(
-        e, centroids, bridge.read_edges(), queries.select("vec_id"),
-        "vec_id", "embedding",
-        k=3, n_entry=_GRAPH_N_ENTRY, hops=_GRAPH_HOPS,
-    )
-    return (
-        walked.join(exact, ["q_id", "neighbor_id"], "left")
-        .groupBy("q_id")
-        .agg(
-            F.count("hit").cast("bigint").alias("n_overlap"),
-            F.round(F.count("hit") / F.lit(3.0), 4).alias("recall_at_3"),
-            F.max("n_candidates").cast("bigint").alias("n_candidates"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("q_id")
     )

@@ -771,10 +771,9 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered at r16 in one of the window's 2 slack slots (staged + gate-proven
-# during r15 by tests/test_sketch_staged.py, which runs the EXACT driver-gate
-# compare — verify_queries' fetch/norm/hash — on the pair at two SFs; that
-# test stays as the always-on regression harness for this entry).
+# tests/test_sketch_staged.py runs the exact oracle compare —
+# verify_queries' fetch/norm/hash — on this pair at two SFs, as the
+# always-on regression harness for this entry.
 # ---------------------------------------------------------------------------
 
 # HLL constants, precomputed once in Python and embedded as literals in BOTH

@@ -91,12 +91,6 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-03-15")
-    # r17 added parallelize_scan(li, "l_orderkey") here off a −25%
-    # interleaved A/B; the r17 driver read it as −10% and the r18
-    # re-validation (interleaved, same session, 7 reps) read the plain
-    # scan FASTER (med 0.81 s vs 0.897 s) — below VERDICT r17's 1.1×
-    # keep-threshold, so the exchange is reverted. At cluster scale the
-    # multi-file lineitem scan is parallel without it.
     li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-03-15")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)

@@ -48,8 +48,8 @@ Replay contract (the §2.8 streaming-family discipline): processing a
 corpus in ANY batch split emits the same pair SET as one global batch
 computation, with each pair tagged by the batch where its later doc
 arrived. tests/test_lsh_bridge_property.py pins this against drawn
-splits; queries/llm_ops.py::lsh_dedup_batch_replay (staged for r17)
-runs the REAL engine under the DuckDB value oracle.
+splits; queries/llm_ops.py::lsh_dedup_batch_replay runs the REAL engine
+under the DuckDB value oracle.
 
 State durability mirrors operators/kcore.py::_pin's two-tier rule: in
 memory (localCheckpoint) for bounded/test corpora, a parquet state dir

@@ -46,161 +46,3 @@ def test_pipeline_bench_artifact_shape():
         assert d["metric"] == "pipeline_e2e"
         assert len(d["plan_digest"]) == 16
 
-
-def test_bench_trend_tool_reads_committed_artifacts():
-    """tools/bench_trend.py (r14) must parse every committed BENCH
-    artifact and apply the digest-comparability rule: priors only count
-    when their round's headline plan digest equals the latest round's.
-    Pure file reads — the flag exit code is NOT asserted (a genuinely
-    flagged family on a degraded host is the tool doing its job)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from tools.bench_trend import _rounds, main
-
-    rounds = _rounds("BENCH_r*.json")
-    assert len(rounds) >= 3, "expected committed BENCH_r*.json history"
-    assert all(isinstance(d.get("queries"), dict) for _, d in rounds)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        main()
-    out = buf.getvalue()
-    assert "headline plan digests" in out
-    assert "[pipeline e2e]" in out
-    # the comparability rule: every printed "best rN" must come from a
-    # digest-matching round
-    latest = max(r for r, _ in rounds)
-    latest_digest = dict(rounds)[latest].get("plan_digest")
-    comparable = {
-        r for r, d in rounds if d.get("plan_digest") == latest_digest
-    }
-    import re as _re
-
-    for m in _re.finditer(r"best r(\d+)", out):
-        assert int(m.group(1)) in comparable
-
-
-def test_bench_trend_probe_comparability_rule():
-    """The probe rule (VERDICT r14 ask #4) must cut both ways: a >1.5x
-    reading on a probe-insane side is annotated but NOT flagged (regime
-    noise — the r14 driver artifact produced nine such rows), while the
-    same regression with quiet probes on both sides still flags, so the
-    exit code keeps meaning something."""
-    import io
-    from contextlib import redirect_stdout
-
-    from tools.bench_trend import _trend_block
-
-    def rounds(latest_probes):
-        return [
-            (1, {"plan_digest": "d", "probe_sec": 0.72,
-                 "queries": {"q": 1.0}}),
-            (2, {"plan_digest": "d", **latest_probes,
-                 "queries": {"q": 3.0}}),
-        ]
-
-    quiet = {"probe_sec": 0.80, "probe_mc_sec": 0.95,
-             "probe_sec_pre": 0.75, "probe_mc_sec_pre": 0.90}
-    contended = {**quiet, "probe_mc_sec": 1.60}
-    with redirect_stdout(io.StringIO()):
-        genuine = _trend_block(rounds(quiet), "queries", 1.5)
-        noise = _trend_block(rounds(contended), "queries", 1.5)
-    assert genuine == ["q"], "quiet-probed 3x regression must flag"
-    assert noise == [], "contended-side 3x reading must not flag"
-
-
-def test_bench_trend_family_digest_rule():
-    """VERDICT r15 ask #5: extended-family comparability keys on each
-    family's OWN registry digest when both artifacts carry one. A prior
-    whose digest for the family differs from the latest round's is
-    excluded from the comparable set (so a re-blessed family cannot
-    inherit stale wall-clock priors), while digest-less priors stay
-    comparable under the headline rule."""
-    import io
-    from contextlib import redirect_stdout
-
-    from tools.bench_trend import _trend_block
-
-    quiet = {"probe_sec": 0.80, "probe_mc_sec": 0.95}
-
-    def ext(t, dig):
-        block = {"queries": {"q": t}, **quiet}
-        if dig:
-            block["digests"] = {"q": dig}
-        return {"plan_digest": "h", **quiet, "extended": block}
-
-    # prior digest differs -> excluded -> 'q' has no comparable prior
-    changed = [(1, ext(1.0, "old")), (2, ext(3.0, "new"))]
-    # prior digest matches -> 3x regression flags
-    same = [(1, ext(1.0, "new")), (2, ext(3.0, "new"))]
-    # prior carries no digest (pre-r16 artifact) -> headline rule keeps
-    # it comparable -> still flags
-    legacy = [(1, ext(1.0, None)), (2, ext(3.0, "new"))]
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assert _trend_block(changed, "extended", 1.5) == []
-        assert _trend_block(same, "extended", 1.5) == ["q"]
-        assert _trend_block(legacy, "extended", 1.5) == ["q"]
-    assert "family digest changed" in buf.getvalue()
-
-
-def test_bench_trend_probe_failed_annotation():
-    """ADVICE r15 #3: the -1.0 fork-timeout sentinel must print as
-    'probe FAILED' (fail-open visibility) rather than blending into the
-    contended/regime-noise annotation, and still must not flag."""
-    import io
-    from contextlib import redirect_stdout
-
-    from tools.bench_trend import _trend_block
-
-    rounds = [
-        (1, {"plan_digest": "d", "probe_sec": 0.72, "queries": {"q": 1.0}}),
-        (2, {"plan_digest": "d", "probe_sec": 0.80, "probe_mc_sec": -1.0,
-             "queries": {"q": 3.0}}),
-    ]
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        flagged = _trend_block(rounds, "queries", 1.5)
-    assert flagged == []
-    assert "probe FAILED" in buf.getvalue()
-    assert "fail-open" in buf.getvalue()
-
-
-def test_suite_trend_parse_and_flag(tmp_path):
-    """tools/suite_trend.py (VERDICT r14 ask #6): parses pytest
-    --durations tables + embedded probe lines; flags a probe-sane
-    per-test regression, suppresses the same regression when either
-    snapshot's probes are insane, and reads the committed r14 snapshot
-    (whose finish pair is mc-insane by design — the 27m02s run)."""
-    from tools.suite_trend import parse
-
-    def snap(secs, mc):
-        return (f"{secs}s call     tests/test_x.py::test_y\n"
-                f"[suite-start] host_probe_sec=0.80 host_probe_mc_sec={mc}\n")
-
-    old = tmp_path / "old.txt"
-    new_quiet = tmp_path / "new_quiet.txt"
-    new_loud = tmp_path / "new_loud.txt"
-    old.write_text(snap(10.0, 0.95))
-    new_quiet.write_text(snap(30.0, 0.95))
-    new_loud.write_text(snap(30.0, 1.60))
-
-    rows, sane = parse(str(old))
-    assert rows == {("call", "tests/test_x.py::test_y"): 10.0} and sane
-
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tool = os.path.join(repo, "tools", "suite_trend.py")
-
-    def run(a, b):
-        return subprocess.run([_sys.executable, tool, a, b],
-                              capture_output=True, text=True).returncode
-
-    assert run(str(old), str(new_quiet)) == 1, "sane 3x regression flags"
-    assert run(str(old), str(new_loud)) == 0, "insane side must not flag"
-
-    r14 = os.path.join(repo, "SUITE_DURATIONS_r14.txt")
-    rows14, sane14 = parse(r14)
-    assert len(rows14) == 60 and sane14 is False

@@ -7,7 +7,7 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from fitness_nutrition_data_pipeline_spark.load import load_warehouse, mirror_to_jdbc
+from fitness_nutrition_data_pipeline_spark.load import load_warehouse
 
 
 @pytest.fixture(scope="module")
@@ -24,11 +24,15 @@ def mini_warehouse(spark):
 
 
 def test_jdbc_mirror_to_derby(spark, mini_warehouse, tmp_path):
-    """S4 (df.write.jdbc append in dependency order, main_etl_pipeline.py:752-794)
+    """S4 (JDBC mirror in dependency order, main_etl_pipeline.py:752-794)
     proven against the Derby embedded database bundled with Spark."""
+    from fitness_nutrition_data_pipeline_spark.load import (
+        mirror_to_jdbc_idempotent,
+    )
+
     url = f"jdbc:derby:{tmp_path}/dwdb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    mirror_to_jdbc(mini_warehouse, url, props)
+    mirror_to_jdbc_idempotent(mini_warehouse, url, props)
     back = spark.read.format("jdbc").option("url", url).option(
         "dbtable", "fact_workoutsession"
     ).options(**props).load()
@@ -60,7 +64,7 @@ def test_partitioned_fact_prunes(spark, mini_warehouse, tmp_path):
 def test_jdbc_idempotent_mirror_double_invoke(spark, mini_warehouse, tmp_path):
     """The staging-swap mirror must converge under retries: invoking it
     twice (a crashed-and-retried orchestration) yields IDENTICAL table
-    contents, where the append-mode mirror would double every row."""
+    contents, where an append-mode mirror would double every row."""
     from fitness_nutrition_data_pipeline_spark.load import (
         mirror_to_jdbc_idempotent,
     )

@@ -812,45 +812,3 @@ def test_fixed_recompute_sites_stay_fixed(registry_plans):
             f"recompute site regressed (see tools/audit_reuse.py)"
         )
 
-
-def test_check_priority_window_contract():
-    """The driver's correctness harness samples the FIRST 50 registry
-    entries, and all_specs() orders the registry by _CHECK_PRIORITY
-    with an `if n in _REGISTRY` filter that silently DROPS unknown
-    names — so a typo or a rename of a cohort query would silently
-    shift the window and sample an unintended set (code-review r16).
-    Pin the invariants: exactly 50 planned slots, no duplicates, every
-    name registered, and every never-driver-checked query (no row in
-    any committed CORRECTNESS_r*.json) inside the sampled window."""
-    import glob
-    import json
-    import os
-
-    from fitness_nutrition_data_pipeline_spark.queries import (
-        _CHECK_PRIORITY,
-        _REGISTRY,
-    )
-
-    assert len(_CHECK_PRIORITY) == 50, (
-        f"window plans {len(_CHECK_PRIORITY)} slots, driver samples 50"
-    )
-    assert len(set(_CHECK_PRIORITY)) == len(_CHECK_PRIORITY), "duplicates"
-    missing = [n for n in _CHECK_PRIORITY if n not in _REGISTRY]
-    assert not missing, (
-        f"priority names not in the registry (all_specs would silently "
-        f"drop them and shift the window): {missing}"
-    )
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        try:
-            checked.update(json.load(open(f)).keys())
-        except Exception:  # noqa: BLE001 — malformed artifact = no evidence
-            continue
-    window = set(list(all_specs())[:50])
-    never = [n for n in _REGISTRY if n not in checked and n not in window]
-    assert not never, (
-        f"never-driver-checked queries outside the sampled window "
-        f"(they can never earn a signal): {never}"
-    )

@@ -2,12 +2,11 @@
 query's canonicalized physical-plan digest must match the committed map
 in tools/registry_digests.json — so a code change that alters ANY
 query's plan cannot land without regenerating (and thereby reviewing)
-the map, and rotation freshness can cite "digest unchanged since the
-query's last green driver signal" as machine-checked evidence.
+the map.
 
 The build+explain pass comes from the shared session-scoped
 ``registry_plans`` fixture (conftest), paid once per suite run across
-the four registry-wide gates; the round-trip/write-audit queries
+the registry-wide gates; the round-trip/write-audit queries
 execute their sink at builder time (that IS the operator under test),
 plan builds themselves never execute.
 """
@@ -51,44 +50,3 @@ def test_registry_plan_digests_match_committed(registry_plans):
         "commit the regenerated map"
     )
 
-
-def test_checkpoint_scar_sidecar_matches_plans(registry_plans):
-    """tools/registry_checkpointed.json (ADVICE r13 #3) must record
-    exactly the queries whose canonical plan scans a checkpointed RDD —
-    the freeze tool excludes those from eligibility because their digest
-    witnesses only the post-pin subplan. Same shared one-pass fixture;
-    zero marginal plan builds."""
-    from tools.registry_digest import has_checkpoint_scar, load_checkpointed
-
-    marked = load_checkpointed()
-    assert marked, "tools/registry_checkpointed.json missing or empty — " \
-        "run `python tools/registry_digest.py --write` and commit it"
-    current = {
-        name for name, plans in registry_plans.items()
-        if has_checkpoint_scar(plans["formatted"])
-    }
-    assert current == marked, (
-        f"checkpoint-scar sidecar out of date — "
-        f"unmarked={sorted(current - marked)} "
-        f"stale={sorted(marked - current)}; run "
-        "`python tools/registry_digest.py --write` and commit"
-    )
-
-
-def test_no_frozen_query_is_checkpoint_scarred():
-    """Freeze-eligibility invariant (ADVICE r13 #3): the frozen ledger
-    and the scar sidecar must stay disjoint — pure file reads."""
-    import json
-
-    from tools.registry_digest import load_checkpointed
-
-    frozen = set(
-        json.load(open(os.path.join(REPO, "tools", "registry_freeze.json")))
-        .get("frozen", {})
-    )
-    overlap = sorted(frozen & load_checkpointed())
-    assert not overlap, (
-        f"frozen queries with checkpoint-scarred plans (digest "
-        f"under-witnesses them — thaw via tools/registry_freeze.py): "
-        f"{overlap}"
-    )

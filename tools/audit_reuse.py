@@ -16,13 +16,9 @@ A surplus is NOT automatically waste: self-joins scan twice by nature,
 contract queries (ann_recall, bloom_membership) intentionally compute
 two methods to compare them, and iterative steps (kmeans_lloyd,
 pca_power) re-read per unrolled iteration. Read the query's doc before
-"fixing" anything — and NEVER change a query outside the current
-driver window (its blessed digest would drift and the rotation guard
-would demand a re-signal it cannot get this round; frozen queries
-would be auto-promoted into a window that has no slack for them).
+"fixing" anything, and re-run its oracle check after any change.
 
-Usage: python tools/audit_reuse.py [--window] [--top N]
-  --window  audit only the first 50 registrations (the modifiable set)
+Usage: python tools/audit_reuse.py [--top N]
 """
 
 from __future__ import annotations
@@ -41,7 +37,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", "/root/testdata/sf0.01")
 def main() -> int:
     args = sys.argv[1:]
     top = int(args[args.index("--top") + 1]) if "--top" in args else 25
-    window_only = "--window" in args
 
     os.environ.setdefault("SPARK_GRAFT_STRICT_IMPORTS", "1")
     from fitness_nutrition_data_pipeline_spark.queries import all_specs
@@ -52,10 +47,9 @@ def main() -> int:
     prev = spark.conf.get(key)
     spark.conf.set(key, "32")
     specs = all_specs()
-    names = list(specs)[:50] if window_only else list(specs)
     rows = []
     try:
-        for name in names:
+        for name in specs:
             try:
                 df = specs[name].builder(spark, SF_DIR)
                 buf = io.StringIO()
@@ -75,7 +69,7 @@ def main() -> int:
         spark.conf.set(key, prev)
     rows.sort(reverse=True)
     print(f"{'extra':>5} {'scans':>5} {'tables':>6} {'reused':>6}  query "
-          f"({'window-only' if window_only else 'full registry'}, {SF_DIR})")
+          f"(full registry, {SF_DIR})")
     for extra, scans, ntab, reused, name in rows[:top]:
         print(f"{extra:>+5} {scans:>5} {ntab:>6} {reused:>6}  {name}")
     return 0

@@ -60,7 +60,7 @@ def _warehouse_digest(warehouse: dict, base_dir: str) -> str:
         # "codegen id : 6" vs ": 7" on shared fragments of the two fact
         # DAGs). Registry digests don't need this (single-threaded
         # builds), so it lives here, not in _normalize — no normalizer
-        # version bump, the freeze evidence chain stays valid.
+        # version bump, the committed registry digests stay comparable.
         text = re.sub(r"codegen id : \d+", "codegen id : N", text)
         h.update(name.encode())
         h.update(_normalize(text, base_dir).encode())

@@ -1,17 +1,12 @@
 """Full-registry plan-digest witness (VERDICT r11 ask #5).
 
-bench.py's ``plan_digest`` covers the 18 headline queries; the other
-270 registry entries had no drift witness, which made stale driver
-signals expensive to re-adjudicate (every rotation round re-argued
-"did anything change since the last green?"). This tool normalizes and
+bench.py's ``plan_digest`` covers the 18 headline queries; the rest of
+the registry had no drift witness. This tool normalizes and
 hashes EVERY registered query's formatted physical plan (initial,
 pre-AQE — a pure code+optimizer witness, no execution) using the exact
 normalizer tools/plan_diff.py applies to PLANS.md, and maintains the
 committed per-query digest map ``tools/registry_digests.json``.
 
-With the map committed, rotation freshness arguments become mechanical:
-"digest unchanged since the query's last green driver signal" is
-machine-checkable evidence that the shipped plan IS the blessed plan.
 tests/test_registry_digest.py runs the check in the suite, so plan
 drift cannot land without regenerating (and thereby reviewing) the map.
 
@@ -43,16 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIGEST_FILE = os.path.join(REPO, "tools", "registry_digests.json")
-# Checkpoint-scar sidecar (ADVICE r13 #3): localCheckpoint truncates
-# lineage to "Scan ExistingRDD", so a digest of the POST-checkpoint plan
-# witnesses little or none of the computation upstream of the pin. The
-# sidecar records which queries' canonical plans carry that scar; the
-# freeze tool (tools/registry_freeze.py) excludes them from freeze
-# eligibility — their drift witness is structurally weaker, so they stay
-# in the hot (driver-signal) rotation where the value oracle re-checks
-# them. Maintained by --write alongside the digest map and gated by the
-# suite's one-pass registry_plans fixture.
-CHECKPOINT_FILE = os.path.join(REPO, "tools", "registry_checkpointed.json")
 # HARD-pinned (not SPARK_GRAFT_VERIFY_SF_DIR): pre-AQE plans can differ
 # across scale factors (file-size-driven broadcast planning), so the
 # committed map is only meaningful at ONE sf — a verify-env override
@@ -63,9 +48,8 @@ CANONICAL_SF_DIR = os.environ.get(
 )
 
 # Bumped whenever _normalize's rules change: digests computed under
-# different normalizer versions are not comparable, and consumers
-# (rotation_report --digest-evidence) must treat cross-version
-# comparisons as "no evidence" rather than report false drift.
+# different normalizer versions are not comparable, so a cross-version
+# comparison is "no evidence" rather than drift.
 NORMALIZER_VERSION = 2
 _META_KEY = "__normalizer_version__"
 
@@ -121,17 +105,6 @@ def digest_of_plan(name: str, plan_text: str, sf_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
-def has_checkpoint_scar(plan_text: str) -> bool:
-    """True when the formatted plan scans a checkpointed RDD — i.e. the
-    plan text (and therefore its digest) is blind to everything upstream
-    of a localCheckpoint pin. Matched on the RDD's recorded call site
-    ("... at localCheckpoint at ..."), NOT on the bare "ExistingRDD"
-    node name: createDataFrame literals print the same node
-    ("at applySchemaToPythonRDD at") but have no hidden upstream — the
-    digest fully witnesses those plans."""
-    return " at localCheckpoint at " in plan_text
-
-
 def plan_text_of(spark, spec, sf_dir: str) -> str:
     df = spec.builder(spark, sf_dir)
     buf = io.StringIO()
@@ -145,13 +118,7 @@ def query_digest(spark, spec, sf_dir: str) -> str:
 
 
 def compute_digests(spark, names=None, sf_dir: str = CANONICAL_SF_DIR) -> dict:
-    return compute_digests_and_scars(spark, names, sf_dir)[0]
-
-
-def compute_digests_and_scars(
-    spark, names=None, sf_dir: str = CANONICAL_SF_DIR
-) -> tuple[dict, dict]:
-    """(name -> digest, name -> has_checkpoint_scar) in one plan pass."""
+    """name -> digest for ``names`` (default: the whole registry)."""
     # strict imports ONLY for the all_specs() call — a permanent
     # os.environ.setdefault here leaked into the pytest process and
     # broke the lenient-mode import test when ordered after this
@@ -176,26 +143,9 @@ def compute_digests_and_scars(
     prev = spark.conf.get(key)
     spark.conf.set(key, "32")
     try:
-        digests: dict[str, str] = {}
-        scars: dict[str, bool] = {}
-        for n in wanted:
-            text = plan_text_of(spark, specs[n], sf_dir)
-            digests[n] = digest_of_plan(n, text, sf_dir)
-            scars[n] = has_checkpoint_scar(text)
-        return digests, scars
+        return {n: query_digest(spark, specs[n], sf_dir) for n in wanted}
     finally:
         spark.conf.set(key, prev)
-
-
-def load_checkpointed() -> set[str]:
-    """Names whose canonical plan carries the checkpoint scar (digest
-    under-witnesses the plan). Empty set when the sidecar is absent —
-    callers then treat every query as fully witnessed, which matches
-    pre-sidecar behavior."""
-    if not os.path.exists(CHECKPOINT_FILE):
-        return set()
-    with open(CHECKPOINT_FILE) as f:
-        return set(json.load(f))
 
 
 def load_committed() -> dict:
@@ -248,29 +198,21 @@ def main() -> int:
     from fitness_nutrition_data_pipeline_spark.session import get_spark
 
     spark = get_spark("registry_digest")
-    current, scars = compute_digests_and_scars(spark, names)
+    current = compute_digests(spark, names)
 
     if write:
         committed = load_committed()
         committed.update(current)
-        marked = load_checkpointed()
-        marked |= {n for n, s in scars.items() if s}
-        marked -= {n for n, s in scars.items() if not s}
         if names is None:
             # full regeneration also drops unregistered leftovers
             committed = current
-            marked = {n for n, s in scars.items() if s}
         out = {_META_KEY: NORMALIZER_VERSION}
         out.update(dict(sorted(committed.items())))
         with open(DIGEST_FILE, "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
-        with open(CHECKPOINT_FILE, "w") as f:
-            json.dump(sorted(marked), f, indent=1)
-            f.write("\n")
         print(f"wrote {len(committed)} digests to {DIGEST_FILE} "
-              f"(normalizer v{NORMALIZER_VERSION}); "
-              f"{len(marked)} checkpoint-scarred to {CHECKPOINT_FILE}")
+              f"(normalizer v{NORMALIZER_VERSION})")
         return 0
 
     committed_ver = load_committed_raw().get(_META_KEY)
@@ -292,21 +234,12 @@ def main() -> int:
         print(f"MISSING {n}: not in committed map (run --write)")
     for n in stale_entries:
         print(f"STALE {n}: committed but no longer registered")
-    marked = load_checkpointed()
-    scar_drift = [
-        n for n, s in scars.items()
-        if s != (n in marked) and n not in missing
-    ]
-    for n in scar_drift:
-        print(f"CKPT-DRIFT {n}: checkpoint scar is {scars[n]} but sidecar "
-              f"says {n in marked} (run --write)")
     ok = len(current) - len(drifted) - len(missing)
     print(
         f"{ok} unchanged, {len(drifted)} drifted, {len(missing)} missing, "
-        f"{len(stale_entries)} stale, {len(scar_drift)} ckpt-drift "
-        f"of {len(current)} checked"
+        f"{len(stale_entries)} stale of {len(current)} checked"
     )
-    return 1 if (drifted or missing or stale_entries or scar_drift) else 0
+    return 1 if (drifted or missing or stale_entries) else 0
 
 
 if __name__ == "__main__":

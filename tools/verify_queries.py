@@ -14,7 +14,7 @@ the shared per-application scratch namespace — concurrent builders can
 interleave those writes, and any builder that toggles a session conf
 races the others. A parallel FAIL therefore warrants a jobs=1 re-check
 before acting on it, and the sequential default (jobs=1) is the only
-mode whose verdict blesses a query for registration/freezing. The tool
+mode whose verdict blesses a query for registration. The tool
 prints this notice on every parallel run so a logged sweep is
 self-describing.
 """
@@ -169,12 +169,7 @@ def main(names=None):
             return 2
         jobs = max(1, int(names[i + 1]))
         names = names[:i] + names[i + 2:] or None
-    if names and names[0] == "--first":
-        # driver-window simulation: exactly the first N registrations in
-        # check-priority order (the driver samples the first 50)
-        n = int(names[1])
-        specs = dict(list(specs.items())[:n])
-    elif names:
+    if names:
         specs = {n: specs[n] for n in names}
 
     def check_one(item) -> tuple[str, str]:
